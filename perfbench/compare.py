@@ -13,7 +13,7 @@
 
 A run-set file holds one JSON object per line: workload, seed, trace and
 the result line run.py printed. `diff` exits 1 when the sets disagree or a
-spread exceeds its bound (setup_s is exempt from the spread check).
+spread exceeds its bound.
 """
 import argparse
 import json
@@ -90,8 +90,7 @@ def cmd_diff(args):
         print(f"== {wl} ({' vs '.join(map(str, runs))} runs)")
         for row in stats.compare(a[wl], b[wl], bounds, better):
             m = row["metric"]
-            spread_ok = m == "setup_s" or (row["base_spread"] <= row["bound"]
-                                           and row["change_spread"] <= row["bound"])
+            spread_ok = row["base_spread"] <= row["bound"] and row["change_spread"] <= row["bound"]
             agree = row["agree"] if args.change else True
             ok = ok and spread_ok and agree
             q1, med, q3 = row["base"]

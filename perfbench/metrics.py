@@ -41,7 +41,8 @@ def window_metrics(res, prefix=""):
     return {
         "latency_p50_ms": stats.percentile(lat, 50),
         "latency_tail_ms": tail,
-        "throughput_rps": len(ops) / w["seconds"],
+        # a failed op answers nothing: only correct answers count as served
+        "throughput_rps": sum(1 for o in ops if o["ok"]) / w["seconds"],
         "pairs_per_s": stats.median(rates),
         "_tail_pct": q,
         "_samples": len(ops),
@@ -65,7 +66,7 @@ def attempts(res):
 def end_to_end(res):
     m = window_metrics(res)
     m["setup_s"] = stats.median(res["setup_s"])
-    m["first_query_ms"] = stats.median(_latencies(_ops(res["first_ops"])))
+    m["first_query_ms"] = _mean_or_zero(_latencies(_ops(res["first_ops"])))
     m["peak_heap_mb"] = res["peak_heap_mb"]
     # figures printed beside the gated set
     batch = res["batch_window"]

@@ -20,6 +20,7 @@ object BatchOd {
   final val IsoSeconds = 120.0
   /** Rows per statement checked against the oracle (every isochrone is). */
   final val Sample = 500
+  final val FilesPerSlot = 4
 
   /** One statement of the pass: `run` executes it and returns the pairs
     * answered plus the check of its rows; `replay` re-runs its kernel work.
@@ -39,10 +40,12 @@ object BatchOd {
     val srcs = (0 until MatrixSide).map(i => i -> Requests.pair(net, rnd))
     val dsts = (0 until MatrixSide).map(i => i -> Requests.pair(net, rnd))
     val iso = (0 until IsoSources).map(i => i -> Requests.pair(net, rnd))
-    // the tables live in parquet files, as a user's tables would
+    // the tables live in parquet files, as a user's tables would, a few
+    // per task slot: a slot that the host slows takes fewer of them,
+    // where with one each the statement would wait for the slow one
     def table(name: String, df: org.apache.spark.sql.DataFrame) = {
       val path = ctx.path(s"tables/$name")
-      df.repartition(ctx.cores).write.parquet(path)
+      df.repartition(ctx.cores * FilesPerSlot).write.parquet(path)
       val t = spark.read.parquet(path)
       t.createOrReplaceTempView(name)
       t
@@ -170,29 +173,12 @@ object BatchOd {
     out.toSeq
   }
 
-  /** Write the tables, warm up with one pass, then the untraced window
-    * and, when tracing, the traced one and its kernel replay (one thread
-    * per core, like the statements' tasks). Returns the replay's kernels.
+  /** The traced statements replayed through the kernels, on one thread
+    * per core, like the statements' tasks.
     */
-  def measure(ctx: Ctx, out: Result, trace: Option[Trace], l: SqlRouting.Loaded): Seq[Kernels] = {
-    val stmts = statements(ctx, l.net, l.graph)
-    passes(new OpRunner(ctx.spark, None, batch = true), stmts, 0.0)
-    val runner = new OpRunner(ctx.spark, None, batch = true)
-    val ps = passes(runner, stmts, ctx.seconds / 2)
-    out.window("batch_window", runner.ops, ps.map(_._1).sum)
-    out.nums("batch_s", ps.map(_._1))
-    out.nums("batch_pairs", ps.map(_._2))
-    Heap.checkpoint()
-    Main.log("batch window done")
-    trace.toSeq.flatMap { t =>
-      val traced = new OpRunner(ctx.spark, Some(t), batch = true)
-      val tps = LayerListener.around(ctx.spark, t)(passes(traced, stmts, ctx.seconds / 2))
-      out.window("traced_batch_window", traced.ops, tps.map(_._1).sum)
-      out.nums("traced_batch_s", tps.map(_._1))
-      out.nums("traced_batch_pairs", tps.map(_._2))
-      val ks = (0 until ctx.cores).map(_ => new Kernels(l.graph))
-      traced.kernelOps.forEach { case (op, s) => s.asInstanceOf[Stmt].replay(t, op, ks) }
-      ks
-    }
+  def replay(ctx: Ctx, t: Trace, traced: OpRunner, g: PreparedGraph): Seq[Kernels] = {
+    val ks = (0 until ctx.cores).map(_ => new Kernels(g))
+    traced.kernelOps.forEach { case (op, s) => s.asInstanceOf[Stmt].replay(t, op, ks) }
+    ks
   }
 }

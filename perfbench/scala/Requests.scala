@@ -1,15 +1,14 @@
 package perfbench
 
-/** Seeded origin-destination pairs over a generated network: a mix of
-  * short local hops (at most four lattice steps) and long trips across the
-  * whole graph, with a few endpoints on the disconnected island.
-  * Coordinates are jittered by up to ~15 m around their node.
+/** Seeded origin-destination pairs over a generated network: short local
+  * hops (at most four lattice steps) and trips to anywhere in the graph,
+  * half each. No traffic data fixes that split, so it is even. Origins are
+  * drawn uniformly over the nodes that have a road, the disconnected
+  * island's among them, so island pairs come up as often as its share of
+  * the nodes. Coordinates are jittered by up to ~15 m around their node.
   */
 object Requests {
   final case class Pair(lat1: Double, lon1: Double, lat2: Double, lon2: Double)
-
-  final val ShortShare = 0.6
-  final val IslandShare = 0.03
 
   /** A node that still has a road, drawn by `draw` until one does. */
   private def usedNode(net: RoadGen.Network)(draw: => Int): Int = {
@@ -18,13 +17,7 @@ object Requests {
     i
   }
 
-  def node(net: RoadGen.Network, rnd: scala.util.Random): Int = {
-    val nMain = net.cols * net.rows
-    usedNode(net) {
-      if (rnd.nextDouble() < IslandShare) nMain + rnd.nextInt(net.size - nMain)
-      else rnd.nextInt(nMain)
-    }
-  }
+  def node(net: RoadGen.Network, rnd: scala.util.Random): Int = usedNode(net)(rnd.nextInt(net.size))
 
   private def near(net: RoadGen.Network, rnd: scala.util.Random, i: Int): Int = {
     val nMain = net.cols * net.rows
@@ -42,7 +35,7 @@ object Requests {
 
   def pair(net: RoadGen.Network, rnd: scala.util.Random): Pair = {
     val a = node(net, rnd)
-    val b = if (rnd.nextDouble() < ShortShare) near(net, rnd, a) else node(net, rnd)
+    val b = if (rnd.nextBoolean()) near(net, rnd, a) else node(net, rnd)
     Pair(net.lat(a) + jitter(rnd), net.lon(a) + jitter(rnd),
       net.lat(b) + jitter(rnd), net.lon(b) + jitter(rnd))
   }

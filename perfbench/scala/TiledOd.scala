@@ -3,10 +3,11 @@ package perfbench
 import graft.algo.BiDijkstra
 import graft.graph.{GraphBuilder, PreparedGraph, Tiled, TiledRouter}
 
-/** `tiled_od`: a graph ten times the flat one on the disk-resident tiled
-  * layout. Each set-up round builds the graph, writes the tile layout and
-  * loads it back. The measured part runs one coordinate matrix on each
-  * side of `Tiled.BroadcastPairLimit`, then point requests whose locality
+/** `tiled_od`: a larger graph on the disk-resident tiled layout. Each
+  * set-up round builds the graph, writes the tile layout and loads it
+  * back. The measured part runs one coordinate matrix on each side of
+  * `Tiled.BroadcastPairLimit`, after an untimed pass of both, then, for
+  * half the run's seconds, point requests whose locality
   * is skewed: most stay in a few hot tiles, the rest scatter over all
   * tiles, past the router's tile cache. Answers are checked against flat
   * Dijkstra on the same graph.
@@ -15,14 +16,18 @@ object TiledOd {
   final val Cells = 5
   val Spec: RoadGen.Spec = RoadGen.Spec(cols = 82, rows = 82, tileCells = Cells)
   final val Rounds = 3
-  final val LoadsPerRound = 2
+  final val LoadsPerRound = 3
   final val SmallPairs = 1000
   final val LargePairs = Tiled.BroadcastPairLimit + 1000
   final val MatrixSample = 300
   final val PoolSize = 400
+  /** Assumed locality, not measured: "mostly a few hot tiles, with a
+    * scattered tail over all tiles" read as the 3 most central tiles, and
+    * every `ScatterEvery`-th point request starting outside them.
+    */
   final val HotTiles = 3
-  /** Every `ScatterEvery`-th point request starts outside the hot tiles. */
-  final val ScatterEvery = 8
+  final val ScatterEvery = 16
+  final val HitWarmSeconds = 1.0
 
   final case class Req(lat1: Double, lon1: Double, lat2: Double, lon2: Double, want: Long)
 
@@ -47,7 +52,7 @@ object TiledOd {
       if (got == r.want) null else s"tiled: expected ${r.want} ms, got $got ms"
 
     val setup, buildMs, loadMs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val firstOps = scala.collection.mutable.ArrayBuffer.empty[OpRec]
+    val firstOps, jvmFirst = scala.collection.mutable.ArrayBuffer.empty[OpRec]
     // the first request after a load crosses the graph: two cold tiles
     val main = (0 until net.rows * net.cols).filter(net.used)
     val (fa, fb) = (main.head, main.last)
@@ -67,15 +72,19 @@ object TiledOd {
       // each further first request, for more first-request samples
       for (l <- 0 until LoadsPerRound) {
         val r = if (l == 0) router else Tiled.load(spark, dir)
-        firstOps += new OpRunner(spark, None).run("tiled_point", null) { _ =>
+        val op = new OpRunner(spark, None).run("tiled_point", null) { _ =>
           val got = r.travelTimeMs(first.lat1, first.lon1, first.lat2, first.lon2)
           (1, () => check(first, got))
         }
+        // the JVM's first request also compiles the router: one sample a
+        // run, it would set the spread of the mean over the others
+        if (k == 0 && l == 0) jvmFirst += op else firstOps += op
       }
       Main.log(s"set-up round $k done")
     }
     out.nums("setup_s", setup)
     out.window("first_ops", firstOps, 0.0)
+    out.window("jvm_first_ops", jvmFirst, 0.0)
     Heap.checkpoint()
     out.put("setup_layers", Json.obj(
       "tiled.build_ms" -> Json.nums(buildMs), "tiled.load_ms" -> Json.nums(loadMs),
@@ -91,14 +100,22 @@ object TiledOd {
     // whatever their share; a small share keeps the median among hits.
     val used = net.lat.indices.filter(net.used)
     val byTile = used.groupBy(i => router.grid.tileOf(net.lat(i), net.lon(i)))
-    val tiles = rnd.shuffle(byTile.keys.toSeq.sorted)
-    val hotSet = tiles.filter(byTile(_).size > 50).take(HotTiles).toSet
-    val (hot, cold) = tiles.partition(hotSet)
+    // the hot tiles are the central ones, a downtown: drawn by the seed,
+    // they differed from run to run in how far their hits search
+    val (cLat, cLon) = (main.map(net.lat(_)).sum / main.size, main.map(net.lon(_)).sum / main.size)
+    def offCentre(t: Int): Double = {
+      val ns = byTile(t)
+      val (la, lo) = (ns.map(net.lat(_)).sum / ns.size - cLat, ns.map(net.lon(_)).sum / ns.size - cLon)
+      la * la + lo * lo
+    }
+    val hot = byTile.keys.toSeq.filter(byTile(_).size > 50).sortBy(offCentre).take(HotTiles)
+    val cold = rnd.shuffle(byTile.keys.toSeq.sorted.filterNot(hot.contains))
     def nodeIn(t: Int): Int = byTile(t)(rnd.nextInt(byTile(t).size))
     def hotNode(): Int = nodeIn(hot(rnd.nextInt(hot.size)))
+    def scattered(k: Int) = k % ScatterEvery == ScatterEvery - 1
     val reqs = (0 until PoolSize).map { k =>
       val (a, b) =
-        if (k % ScatterEvery == ScatterEvery - 1) (nodeIn(cold(k / ScatterEvery % cold.size)), hotNode())
+        if (scattered(k)) (nodeIn(cold(k / ScatterEvery % cold.size)), hotNode())
         else (hotNode(), hotNode())
       Req(net.lat(a), net.lon(a), net.lat(b), net.lon(b),
         oracle(net.lat(a), net.lon(a), net.lat(b), net.lon(b)))
@@ -135,7 +152,12 @@ object TiledOd {
       }
 
     Main.log("request pool ready")
-    loop(new OpRunner(spark, None), math.min(1.5, ctx.seconds))
+    // an untimed pass of both matrices first: the first run of each plan
+    // pays for its code generation and JIT
+    val warm = new OpRunner(spark, None, batch = true)
+    matrix(warm, "matrix_small", small)
+    matrix(warm, "matrix_large", large)
+    Main.log("matrices warm")
     val batchRunner = new OpRunner(spark, None, batch = true)
     val ms = Seq(matrix(batchRunner, "matrix_small", small), matrix(batchRunner, "matrix_large", large))
     val batch = ms.map(_.ms / 1000).sum
@@ -144,15 +166,22 @@ object TiledOd {
     out.nums("batch_pairs", Seq(ms.filter(_.ok).map(_.pairs).sum.toDouble))
     Heap.checkpoint()
     Main.log("matrices done")
+    // warm the point path right before its window, after the matrices;
+    // tile loads take nearly all of a loop's time, so the hits first run
+    // alone, until compiled: in the mixed loop they get only milliseconds
+    val hits = reqs.indices.filterNot(scattered).map(reqs)
+    val hitRunner = new OpRunner(spark, None)
+    ClosedLoop.run(HitWarmSeconds)(k => point(hitRunner, hits(k % hits.size)): Unit)
+    loop(new OpRunner(spark, None), math.min(3.0, ctx.seconds))
     val runner = new OpRunner(spark, None)
-    out.window("window", runner.ops, loop(runner, ctx.seconds))
+    out.window("window", runner.ops, loop(runner, ctx.seconds / 2))
     Heap.checkpoint()
     trace.foreach { t =>
       val tracedBatch = new OpRunner(spark, Some(t), batch = true)
       val traced = new OpRunner(spark, Some(t))
       val (tm, tsecs) = LayerListener.around(spark, t) {
         (Seq(matrix(tracedBatch, "matrix_small", small), matrix(tracedBatch, "matrix_large", large)),
-          loop(traced, ctx.seconds))
+          loop(traced, ctx.seconds / 2))
       }
       out.window("traced_batch_window", tracedBatch.ops, tm.map(_.ms / 1000).sum)
       out.window("traced_window", traced.ops, tsecs)
