@@ -16,13 +16,14 @@ import org.apache.spark.sql.SparkSessionExtensions
   *    (functions.NfcNormalize) expressions into the function registry via
   *    injectFunction — resolve in SQL and `call_function` without any
   *    per-session register call;
-  *  - the `travel_time_load_config` plan-time load rule
-  *    (routing.RoutingFunctions.LoadConfigRule) via injectOptimizerRule, so
+  *  - the driver-side plan-time rule
+  *    (routing.RoutingFunctions.DriverSideRule) via injectOptimizerRule, so
   *    `SELECT travel_time_load_config('<path>')` works as a session's first
   *    statement (the reference's script-opening contract,
-  *    src/travel_time_extension.cpp:446-462). The routing UDF surface
-  *    itself still binds per load (broadcast capture), via
-  *    RoutingContext.install/loadConfig.
+  *    src/travel_time_extension.cpp:446-462), and one-row statements of
+  *    deterministic functions are answered without a Spark job. The
+  *    routing UDF surface itself still binds per load (broadcast capture),
+  *    via RoutingContext.install/loadConfig.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.expressions.Expression
@@ -199,7 +200,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // host JSON-construction vocabulary (json_object/json_array/json) —
     // the reference's GeoJSON-export examples run verbatim
     graft.functions.JsonCompat.injectable.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(spark => new routing.RoutingFunctions.LoadConfigRule(spark))
+    ext.injectOptimizerRule(spark => new routing.RoutingFunctions.DriverSideRule(spark))
     // the host engine's QUALIFY clause (window-result filtering), folded at
     // parse time into the equivalent window-subquery shape (plans.Qualify)
     ext.injectParser((session, delegate) => new plans.QualifyParser(session, delegate))

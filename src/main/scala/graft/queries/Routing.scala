@@ -19,6 +19,12 @@ object Routing {
 
   final val Modes = Seq("auto", "truck", "bicycle", "pedestrian")
 
+  /** The reference checkout r26 and r27 read verbatim:
+    * `$GRAFT_REFERENCE_DIR`, by default `reference` in the user's home.
+    */
+  val ReferenceDir: String = sys.env.getOrElse("GRAFT_REFERENCE_DIR",
+    java.nio.file.Paths.get(sys.props("user.home"), "reference").toString)
+
   /** Idempotent per-session fixture load + function registration
     * (the reference's `travel_time_load_config` lifecycle,
     * src/travel_time_extension.cpp:433-466). Loads the golden four modes
@@ -606,9 +612,7 @@ object Routing {
         }.toSeq
         val pbf = s"$dir/monaco-latest.osm.pbf"
         graft.graph.OsmPbfWriter.write(pbf, nodes, ways)
-        // env-resolvable so the witness can run where the reference
-        // checkout lives elsewhere (the round driver's box has it here)
-        val refDir = sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+        val refDir = ReferenceDir
         val script = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(s"$refDir/examples/monaco_pure_sql.sql")),
           java.nio.charset.StandardCharsets.UTF_8)
@@ -834,7 +838,7 @@ object Routing {
         // Verify gate turns into hard driver red on regression. An
         // independent plain-Dijkstra over the decoded adjacency list
         // cross-checks the engine's CH answer on the Casino→Port pair.
-        val refDir = sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+        val refDir = ReferenceDir
         val fixture = s"$refDir/test/data/monaco.osm.pbf.auto.routing"
         val g = graft.graph.RoutingCacheCodec.decode(fixture)
         val (nodes, edges) = graft.graph.RoutingCacheCodec.toDataFrames(s, g)

@@ -155,7 +155,7 @@ object RoutingContext {
     * EMPTY handle, so `SELECT travel_time_load_config(path)` is callable as
     * a script's very first statement (the reference example sequence,
     * examples/monaco_end_to_end.sql) — the literal call is intercepted by
-    * RoutingFunctions.LoadConfigRule at plan time and performs the real
+    * RoutingFunctions.DriverSideRule at plan time and performs the real
     * driver-side load; routing functions then rebind to the new generation.
     */
   def install(spark: SparkSession): Unit =

@@ -24,23 +24,9 @@ import org.apache.spark.sql.functions._
   */
 object RoutingFunctions {
 
-  /** Optimizer rule that gives the state-changing SQL calls their reference
-    * semantics by executing them at PLAN time on the DRIVER — the only
-    * place a Spark cluster can create broadcasts or launch build jobs:
-    *
-    *  - `travel_time_load_config(<lit>)` actually loads (idempotent per
-    *    path; src/travel_time_extension.cpp:446-462) and folds to true;
-    *  - `valhalla_build_tiles(<lit>, <lit>)` runs the distributed
-    *    PBF→graph build (src/valhalla_build_tiles_simple.cpp:149-236) and
-    *    folds to the produced config path.
-    *
-    * Functions re-register against the new generation, so the reference's
-    * build-then-load-then-query script sequence works statement by
-    * statement. Non-literal arguments fall through to the registered UDFs.
-    */
   /** Analysis-time placeholder for the driver-side calls when only the
     * session extension is installed (no UDF registration yet): resolves so
-    * the plan analyzes, then [[LoadConfigRule]] replaces it. Evaluation
+    * the plan analyzes, then [[DriverSideRule]] replaces it. Evaluation
     * reaching an executor means the arguments were non-literal — error out
     * rather than silently no-op.
     */
@@ -56,10 +42,41 @@ object RoutingFunctions {
       copy(children = newChildren)
   }
 
-  final class LoadConfigRule(spark: SparkSession)
+  /** Optimizer rule that answers on the DRIVER at plan time what needs no
+    * executor. It gives the state-changing SQL calls their reference
+    * semantics by executing them there — the only place a Spark cluster
+    * can create broadcasts or launch build jobs:
+    *
+    *  - `travel_time_load_config(<lit>)` actually loads (idempotent per
+    *    path; src/travel_time_extension.cpp:446-462) and folds to true;
+    *  - `valhalla_build_tiles(<lit>, <lit>)` runs the distributed
+    *    PBF→graph build (src/valhalla_build_tiles_simple.cpp:149-236) and
+    *    folds to the produced config path.
+    *
+    * Functions re-register against the new generation, so the reference's
+    * build-then-load-then-query script sequence works statement by
+    * statement. Non-literal arguments fall through to the registered UDFs.
+    *
+    * Then it folds a one-row statement — `Project(list, OneRowRelation)`,
+    * a SELECT without FROM — into a one-row `LocalRelation`, evaluating
+    * `list` once on the driver, when every expression is deterministic and
+    * none is `Unevaluable` (which also keeps out subqueries, outer
+    * references and a non-literal [[DriverSideCall]]). This is Spark's
+    * `ConvertToLocalRelation` applied to the relation that rule never sees:
+    * `LocalTableScanExec` collects on the driver, so a point request such
+    * as `SELECT travel_time(…)` starts no job, stage, task or codegen
+    * compile. A failing function therefore throws its `FAILED_EXECUTE_UDF`
+    * during optimization, and `explain()` of such a statement runs it.
+    * Statements with a FROM keep their jobs.
+    */
+  final class DriverSideRule(spark: SparkSession)
       extends org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, ScalaUDF}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Expression,
+      InterpretedMutableProjection, Literal, ScalaUDF, Unevaluable}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan,
+      OneRowRelation, Project}
     import org.apache.spark.sql.types.{BooleanType, StringType}
 
     private def loadConfig(args: Seq[Expression], orig: Expression): Expression =
@@ -82,8 +99,7 @@ object RoutingFunctions {
         case _ => orig
       }
 
-    override def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    private def substitute(plan: LogicalPlan): LogicalPlan =
       plan.transformAllExpressions {
         case u: ScalaUDF if u.udfName.contains("travel_time_load_config") =>
           loadConfig(u.children, u)
@@ -94,18 +110,30 @@ object RoutingFunctions {
         case d @ DriverSideCall("valhalla_build_tiles", args, _) =>
           buildTiles(args, d)
       }
+
+    private def evaluableOnDriver(e: Expression): Boolean =
+      e.deterministic && !e.exists(_.isInstanceOf[Unevaluable])
+
+    private def foldOneRow(plan: LogicalPlan): LogicalPlan =
+      plan.transform {
+        case Project(list, OneRowRelation()) if list.forall(evaluableOnDriver) =>
+          val row = new InterpretedMutableProjection(list, Nil)(InternalRow.empty).copy()
+          LocalRelation(list.map(_.toAttribute), Seq(row))
+      }
+
+    override def apply(plan: LogicalPlan): LogicalPlan = foldOneRow(substitute(plan))
   }
 
-  private def injectLoadConfigRule(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[LoadConfigRule]))
+  private def injectDriverSideRule(spark: SparkSession): Unit =
+    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[DriverSideRule]))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new LoadConfigRule(spark)
+        spark.experimental.extraOptimizations :+ new DriverSideRule(spark)
 
   /** Register every travel_time* function against the given handle. */
   def register(spark: SparkSession, handle: RouterHandle): Unit = {
     val h = handle // stable capture
 
-    injectLoadConfigRule(spark)
+    injectDriverSideRule(spark)
 
     spark.udf.register("travel_time",
       (lat1: Double, lon1: Double, lat2: Double, lon2: Double, costing: String) =>
@@ -114,7 +142,7 @@ object RoutingFunctions {
     spark.udf.register("travel_time_is_loaded", () => h.graphs.nonEmpty)
 
     // Fallback surface for NON-LITERAL paths (literal calls are intercepted
-    // by [[LoadConfigRule]] and actually load): reports whether the path IS
+    // by [[DriverSideRule]] and actually load): reports whether the path IS
     // the loaded generation. Evaluated per call, not captured at
     // registration, so reloads are visible; driver-state read — on a real
     // cluster the literal/rule path is the supported form.
@@ -124,7 +152,7 @@ object RoutingFunctions {
         path.stripSuffix("/" + graft.graph.GraphStore.ConfigName) == loadedKey)
     })
 
-    // Literal calls run driver-side via [[LoadConfigRule]] (the reference's
+    // Literal calls run driver-side via [[DriverSideRule]] (the reference's
     // SQL build surface, valhalla_build_tiles_simple.cpp:149-236); the UDF
     // body exists for registry resolution and rejects the non-literal form
     // (a build cannot launch Spark jobs from inside an executor task).

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench harness's noise-reduction draw: min-of-2 with a third sample
   * on >2x disagreement. -1 is the "query threw" sentinel, so the third
-  * sample's failure must never poison a pair of passing primaries.
+  * sample's failure must never poison a pair of passing primaries, and the
+  * suite total must never add it.
   */
 class BenchSpec extends AnyFunSuite {
   private def never(): Double = fail("third sample must not be drawn")
@@ -28,5 +29,11 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.robustMin(-1.0, 5.0, () => never()) == -1.0)
     assert(Bench.robustMin(5.0, -1.0, () => never()) == -1.0)
     assert(Bench.robustMin(-1.0, -1.0, () => never()) == -1.0)
+  }
+
+  test("the suite total sums passing queries only; a failure never lowers it") {
+    assert(Bench.successTotal(Seq(1.5, -1.0, 2.0)) == 3.5)
+    assert(Bench.successTotal(Seq(-1.0, -1.0)) == 0.0)
+    assert(Bench.successTotal(Seq(0.25, 0.5)) == 0.75)
   }
 }

@@ -29,18 +29,33 @@ class CodegenSweepSpec extends AnyFunSuite {
         val r =
           try { fn(spark, sf).count(); None }
           catch { case e: Throwable =>
-            val cause = Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
-              .takeWhile(_ != null).toSeq.last
-            Some(s"$name: ${cause.getClass.getSimpleName}: " +
-              s"${Option(cause.getMessage).getOrElse("").linesIterator.take(3).mkString(" | ")}")
+            Some(name -> Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
+              .takeWhile(_ != null).toSeq.last)
           }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         r
       }
-      assert(failures.isEmpty,
-        s"${failures.size} query(ies) hit a codegen compile failure:\n" +
-          failures.mkString("\n"))
+      // a query that reads the reference checkout and cannot find it never
+      // reached codegen: name that cause instead of a compile failure
+      def missingReference(e: Throwable): Option[String] = e match {
+        case n: java.nio.file.NoSuchFileException =>
+          Option(n.getFile).map(java.nio.file.Paths.get(_))
+            .filter(_.startsWith(ReferenceCheckout.dir))
+            .map(ReferenceCheckout.dir.relativize(_).toString)
+        case _ => None
+      }
+      val (reference, compile) = failures.partition(f => missingReference(f._2).nonEmpty)
+      assert(compile.isEmpty,
+        s"${compile.size} query(ies) hit a codegen compile failure:\n" +
+          compile.map { case (name, cause) =>
+            s"$name: ${cause.getClass.getSimpleName}: " +
+              s"${Option(cause.getMessage).getOrElse("").linesIterator.take(3).mkString(" | ")}"
+          }.mkString("\n"))
+      withClue(s"${reference.map(_._1).mkString(", ")}: ") {
+        reference.foreach(f => ReferenceCheckout.require(missingReference(f._2).get))
+        assert(reference.isEmpty, "reference files were missing during the sweep")
+      }
     } finally {
       spark.conf.set("spark.sql.codegen.fallback", prevFallback)
     }

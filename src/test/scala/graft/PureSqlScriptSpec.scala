@@ -51,7 +51,7 @@ class PureSqlScriptSpec extends AnyFunSuite {
     val pbfPath = gridPbf(dir, "monaco-latest.osm.pbf")
 
     val script = new String(
-      Files.readAllBytes(Paths.get("/root/reference/examples/monaco_pure_sql.sql")),
+      Files.readAllBytes(ReferenceCheckout.require("examples/monaco_pure_sql.sql")),
       java.nio.charset.StandardCharsets.UTF_8)
       .replace("https://download.geofabrik.de/europe/monaco-latest.osm.pbf", pbfPath)
       .replace("./monaco_tiles", s"$dir/monaco_tiles")
@@ -108,7 +108,7 @@ class PureSqlScriptSpec extends AnyFunSuite {
   }
 
   test("every reference example script splits and parses through the dialect layer") {
-    val dir = new java.io.File("/root/reference/examples")
+    val dir = ReferenceCheckout.require("examples").toFile
     val scripts = dir.listFiles().filter(_.getName.endsWith(".sql")).sortBy(_.getName)
     assert(scripts.length >= 8)
     val parser = spark.sessionState.sqlParser
@@ -165,7 +165,7 @@ class PureSqlScriptSpec extends AnyFunSuite {
     val prevMacro = Qualify.macrosOf(spark).get("travel_time_route")
     try {
       val script = new String(
-        Files.readAllBytes(Paths.get("/root/reference/examples/monaco_end_to_end.sql")),
+        Files.readAllBytes(ReferenceCheckout.require("examples/monaco_end_to_end.sql")),
         java.nio.charset.StandardCharsets.UTF_8)
         .replace("https://download.geofabrik.de/europe/monaco-latest.osm.pbf", url)
         .replace("'monaco.osm.pbf'", s"'$dir/monaco.osm.pbf'")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.graph.{GraphStore, OsmPbf, OsmPbfWriter}
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,7 +39,7 @@ class SltSpec extends AnyFunSuite {
 
   private def runFile(name: String): SltRunner.Result = {
     val text = new String(
-      Files.readAllBytes(Paths.get(s"/root/reference/test/sql/$name")),
+      Files.readAllBytes(ReferenceCheckout.require(s"test/sql/$name")),
       java.nio.charset.StandardCharsets.UTF_8)
     // a FRESH session: the files assume an engine where nothing is
     // registered until `require` loads the extension

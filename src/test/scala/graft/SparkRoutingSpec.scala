@@ -80,6 +80,52 @@ class SparkRoutingSpec extends AnyFunSuite {
     assert(chain(e).exists(_.isInstanceOf[IllegalStateException]))
   }
 
+  /** `body`'s result and the jobs it started, counted by job group. The
+    * status tracker is fed by the listener bus, so a marker job in a second
+    * group is awaited first: once it shows, every job started before it
+    * has been recorded.
+    */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    def inGroup[R](g: String)(f: => R): R = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val result = inGroup(group)(body)
+    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(30)
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty,
+      "listener bus never recorded the marker job")
+    (result, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  test("one-row routing statements are answered on the driver without a job, " +
+    "with the same row as over a table") {
+    Seq(
+      "travel_time(43.7, 7.4, 43.745, 7.445, 'auto')",
+      "travel_time_route_wkb(st_point(7.4, 43.7), st_point(7.44, 43.74), 'auto')",
+      "travel_time_snap(43.7, 7.4, 'auto')",
+      "travel_time_isochrone(43.7, 7.4, 120.0, 'auto')",
+      """travel_time_request('route', '{"locations": [{"lat": 43.7, "lon": 7.4},
+        |  {"lat": 43.781, "lon": 7.481}], "costing": "auto"}')""".stripMargin
+    ).foreach { call =>
+      val (folded, foldedJobs) = withJobs(one(s"SELECT $call AS v"))
+      val (scanned, scannedJobs) =
+        withJobs(spark.range(1).selectExpr(s"$call AS v").collect().head)
+      assert(foldedJobs == 0, call)
+      assert(scannedJobs > 0, call)
+      assert(!folded.isNullAt(0), call)
+      assert(folded == scanned, call)
+    }
+  }
+
+  test("a nondeterministic one-row statement still runs as a job") {
+    assert(withJobs(spark.sql("SELECT rand() AS r").collect())._2 > 0)
+  }
+
   test("matrix SQL: N×M rows, from/to indices complete (monaco_routing.test:107-124)") {
     val rows = spark.sql(
       """SELECT m.* FROM (SELECT explode(travel_time_matrix(
