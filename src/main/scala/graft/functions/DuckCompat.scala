@@ -131,8 +131,8 @@ object DuckCompat {
     })
 
   /** Does field `ordinal` of the struct-valued `child` hold a geometry?
-    * Covers the three shapes the reference exercises: the registered
-    * route-macro UDFs; a `struct_pack`/`named_struct` whose field value is
+    * Covers the three shapes the reference exercises: the route-macro
+    * functions; a `struct_pack`/`named_struct` whose field value is
     * itself geometry-producing; and the host macro's scalar-subquery form
     * (`(SELECT struct_pack(... geometry := ST_GeomFromWKB(...)) FROM …)`,
     * test/sql/monaco_routing.test:134-140) — walked through the subquery
@@ -140,8 +140,8 @@ object DuckCompat {
     */
   private def structFieldIsGeometry(child: Expression, ordinal: Int): Boolean =
     child match {
-      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
-        u.udfName.exists(n => GeometryStructFns.contains(n.toLowerCase))
+      case c: graft.routing.RoutingFunctions.Call =>
+        GeometryStructFns.contains(c.spec.name)
       case cns: org.apache.spark.sql.catalyst.expressions.CreateNamedStruct
           if cns.valExprs.length > ordinal =>
         producesGeometry(cns.valExprs(ordinal))

@@ -11,15 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (test/sql/travel_time.test:16-48): `duckdb_functions()` there,
   * `graft_functions()` here — a table function listing every function name
   * resolvable in the current session (built-ins, injected expressions, and
-  * the per-load routing UDF surface), so the reference's
+  * the routing surface), so the reference's
   * `SELECT function_name FROM graft_functions() WHERE function_name = '…'`
   * assertions run verbatim. `typeof` needs no shim: Spark ships it.
   *
   * The listing snapshots the session FunctionRegistry at analysis time —
   * the same moment DuckDB's table function sees its catalog — so a
-  * function registered by `travel_time_load_config` in an earlier
-  * statement is visible, exactly like the reference's before/after-load
-  * test split.
+  * function registered in an earlier statement is visible.
   */
 object Introspection {
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.graph.GridFixture
-import graft.routing.{RouterHandle, RoutingContext, RoutingFunctions, StFunctions, TravelTime}
+import graft.routing.{RouterHandle, RoutingContext, StFunctions, TravelTime}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,7 @@ object Routing {
     val h = RoutingContext.load(s, "grid-fixture",
       (Modes ++ graft.graph.SpeedModel.ExtraModes)
         .map(m => m -> GridFixture.dataFrames(s, m)).toMap)
-    RoutingFunctions.register(s, h)
+    RoutingContext.install(s)
     StFunctions.register(s)
     h
   }
@@ -843,8 +843,7 @@ object Routing {
         val g = graft.graph.RoutingCacheCodec.decode(fixture)
         val (nodes, edges) = graft.graph.RoutingCacheCodec.toDataFrames(s, g)
         RoutingContext.unload()
-        val h = RoutingContext.load(s, fixture, Map("auto" -> (nodes, edges)))
-        RoutingFunctions.register(s, h) // rebind the SQL surface to this graph
+        RoutingContext.load(s, fixture, Map("auto" -> (nodes, edges)))
         val row = try {
           s.sql(
             """SELECT

@@ -124,13 +124,13 @@ object RoutingContext {
 
   /** `travel_time_load_config` analogue (src/travel_time_extension.cpp:433-466):
     * resolve a config path (directory → `<dir>/graft_routing.json`), load every
-    * mode it declares, broadcast, and (re)register the SQL functions.
-    * Idempotent per resolved path; a different path frees the old broadcasts
-    * and rebinds (the reference's free-on-path-change,
-    * src/travel_time_extension.cpp:449-452). Driver-side by design: in Spark
-    * the "process-global router" is the broadcast handle captured by the
-    * registered functions, so (re)binding must happen where broadcasts are
-    * created (SURVEY §7 risk 1).
+    * mode it declares, broadcast, and [[install]] the SQL functions if the
+    * session lacks them. Idempotent per resolved path; a different path frees
+    * the old broadcasts (the reference's free-on-path-change,
+    * src/travel_time_extension.cpp:449-452), and the next statement binds the
+    * new handle when it is analyzed. Driver-side by design: in Spark the
+    * "process-global router" is the broadcast handle the functions bind, so
+    * loading must happen where broadcasts are created (SURVEY §7 risk 1).
     */
   def loadConfig(spark: SparkSession, path: String): RouterHandle = {
     val (cfgPath, modes) = graft.graph.GraphStore.resolveConfig(path,
@@ -147,19 +147,33 @@ object RoutingContext {
       case Some(sampler) => setElevation(sampler)
       case None => clearElevation()
     }
-    RoutingFunctions.register(spark, h)
+    install(spark)
     h
   }
 
-  /** Bootstrap installation: registers the whole SQL surface against an
-    * EMPTY handle, so `SELECT travel_time_load_config(path)` is callable as
+  /** Installs the SQL surface into a session built without
+    * graft.GraftExtensions: the same function builders the extension
+    * injects, the FROM-position `travel_time_matrix`, and
+    * RoutingFunctions.DriverSideRule as an extra optimization. Does nothing
+    * when the session already resolves `travel_time`, so the rule runs once.
+    * Before any load, `SELECT travel_time_load_config(path)` is callable as
     * a script's very first statement (the reference example sequence,
-    * examples/monaco_end_to_end.sql) — the literal call is intercepted by
-    * RoutingFunctions.DriverSideRule at plan time and performs the real
-    * driver-side load; routing functions then rebind to the new generation.
+    * examples/monaco_end_to_end.sql): the rule performs the real driver-side
+    * load at plan time. Until a load, routing functions fail with "Router
+    * not loaded".
     */
-  def install(spark: SparkSession): Unit =
-    RoutingFunctions.register(spark, RouterHandle(Map.empty))
+  def install(spark: SparkSession): Unit = {
+    val st = spark.sessionState
+    if (!st.functionRegistry.functionExists(
+        new org.apache.spark.sql.catalyst.FunctionIdentifier("travel_time"))) {
+      RoutingFunctions.injectable.foreach { case (id, info, b) =>
+        st.functionRegistry.registerFunction(id, info, b)
+      }
+      val (id, info, b) = RoutingFunctions.matrixTable
+      st.tableFunctionRegistry.registerFunction(id, info, b)
+      spark.experimental.extraOptimizations :+= new RoutingFunctions.DriverSideRule(spark)
+    }
+  }
 
   /** `SET valhalla_tiles` analogue (src/config_setting.cpp:25-70): read
     * `spark.graft.routing.tiles` from the session conf and load it if it is

@@ -1,17 +1,26 @@
 package graft.routing
 
-import graft.geo.{Geo, Wkb}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier, InternalRow,
+  ScalaReflection}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, StringType}
+import scala.reflect.runtime.universe.TypeTag
 
-/** SQL function surface — one registered function per reference operator
+/** SQL function surface — one function per reference operator
   * (registration list: src/travel_time_extension.cpp:881-942).
   *
-  * Registration captures the [[RouterHandle]] (serializable broadcast
-  * handles), so the closures are cluster-safe: executors read the broadcast,
-  * never driver state. Null handling: primitive-arg Scala UDFs return NULL on
-  * any NULL input without invoking the function — exactly the reference's
-  * per-row NULL contract (src/travel_time_extension.cpp:636-639).
+  * Every function is a [[Call]] of its [[Spec]]. The builders are registered
+  * once per session (injected by graft.GraftExtensions, or put into the
+  * session's registries by [[RoutingContext.install]]), and each binds the
+  * loaded [[RouterHandle]] (serializable broadcast handles) when a statement
+  * is analyzed: executors read the broadcast, never driver state, and the
+  * statement after a load routes on the new generation. Null handling: a
+  * NULL in any argument gives NULL without invoking the kernel — the
+  * reference's per-row NULL contract (src/travel_time_extension.cpp:636-639).
   *
   * DOCUMENTED DIVERGENCE — geometry point caps: the reference truncates
   * route geometries at MAX_POINTS 10_000 and isochrone clouds at 50_000
@@ -24,23 +33,164 @@ import org.apache.spark.sql.functions._
   */
 object RoutingFunctions {
 
-  /** Analysis-time placeholder for the driver-side calls when only the
-    * session extension is installed (no UDF registration yet): resolves so
-    * the plan analyzes, then [[DriverSideRule]] replaces it. Evaluation
-    * reaching an executor means the arguments were non-literal — error out
-    * rather than silently no-op.
+  /** One SQL function: name, argument types, result type with the result's
+    * own nullability, and the kernel, which gets the bound handle and the
+    * arguments as non-null Scala values.
     */
-  final case class DriverSideCall(name: String,
-                                  children: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                                  resultType: org.apache.spark.sql.types.DataType)
-      extends org.apache.spark.sql.catalyst.expressions.Expression
-      with org.apache.spark.sql.catalyst.expressions.Unevaluable {
-    override def dataType: org.apache.spark.sql.types.DataType = resultType
-    override def nullable: Boolean = false
-    override protected def withNewChildrenInternal(
-        newChildren: IndexedSeq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+  final case class Spec(name: String, inputTypes: Seq[DataType], dataType: DataType,
+                        nullable: Boolean, kernel: (RouterHandle, Seq[Any]) => Any)
+
+  /** A call of a routing function. The handle is a field, not a child: it
+    * is bound at analysis and never evaluated. Arguments convert to Scala
+    * values and the result back to Catalyst by the spec's types.
+    */
+  final case class Call(spec: Spec, handle: RouterHandle, children: Seq[Expression])
+      extends Expression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes: Seq[DataType] = spec.inputTypes
+    override def dataType: DataType = spec.dataType
+    override def nullable: Boolean = spec.nullable || children.exists(_.nullable)
+    override def prettyName: String = spec.name
+    override protected def stringArgs: Iterator[Any] = children.iterator
+
+    @transient private lazy val args = children.toArray
+    @transient private lazy val toScala =
+      spec.inputTypes.map(CatalystTypeConverters.createToScalaConverter).toArray
+    @transient private lazy val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(dataType)
+
+    override def eval(input: InternalRow): Any = {
+      val values = new Array[Any](args.length)
+      var i = 0
+      while (i < values.length) {
+        val v = args(i).eval(input)
+        if (v == null) return null
+        values(i) = toScala(i)(v)
+        i += 1
+      }
+      toCatalyst(spec.kernel(handle, scala.collection.immutable.ArraySeq.unsafeWrapArray(values)))
+    }
+
+    override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Call =
       copy(children = newChildren)
   }
+
+  /** A spec whose result type is the Scala result type's Catalyst schema. */
+  private def spec[R: TypeTag](name: String, in: DataType*)(
+      kernel: (RouterHandle, Seq[Any]) => R): Spec = {
+    val out = ScalaReflection.schemaFor[R]
+    Spec(name, in, out.dataType, out.nullable, kernel)
+  }
+
+  private val D = DoubleType
+  private val S = StringType
+  private val B = BinaryType
+  private val Ds = ArrayType(DoubleType)
+
+  private def route(name: String): Spec =
+    spec[Option[Route]](name, B, B, S) {
+      case (h, Seq(from: Array[Byte], to: Array[Byte], costing: String)) =>
+        RoutingOps.routeAny(h.requireGraph(costing), from, to)
+    }
+
+  private val matrix = spec[Seq[MatrixEntry]]("travel_time_matrix", Ds, Ds, Ds, Ds, S) {
+    case (h, Seq(srcLats: Seq[Double @unchecked], srcLons: Seq[Double @unchecked],
+                 dstLats: Seq[Double @unchecked], dstLons: Seq[Double @unchecked],
+                 costing: String)) =>
+      RoutingOps.matrixEntries(h.requireGraph(costing), srcLats, srcLons, dstLats, dstLons)
+  }
+
+  private val specs: Seq[Spec] = Seq(
+    spec[Option[Double]]("travel_time", D, D, D, D, S) {
+      case (h, Seq(lat1: Double, lon1: Double, lat2: Double, lon2: Double, costing: String)) =>
+        RoutingOps.travelTimeSeconds(h.requireGraph(costing), lat1, lon1, lat2, lon2)
+    },
+    spec[Boolean]("travel_time_is_loaded") { case (h, _) => h.graphs.nonEmpty },
+    // Fallback for NON-LITERAL paths (literal calls are intercepted by
+    // [[DriverSideRule]] and actually load): reports whether the path IS
+    // the loaded generation. Evaluated per call, so reloads are visible;
+    // driver-state read — on a real cluster the literal/rule path is the
+    // supported form.
+    spec[Boolean]("travel_time_load_config", S) {
+      case (_, Seq(path: String)) =>
+        val loadedKey = RoutingContext.loadedPath.getOrElse("")
+        path == loadedKey ||
+          path.stripSuffix("/" + graft.graph.GraphStore.ConfigName) == loadedKey
+    },
+    // Literal calls run driver-side via [[DriverSideRule]] (the reference's
+    // SQL build surface, valhalla_build_tiles_simple.cpp:149-236); the
+    // kernel rejects the non-literal form (a build cannot launch Spark jobs
+    // from inside an executor task).
+    spec[String]("valhalla_build_tiles", S, S) { (_, _) =>
+      throw new IllegalStateException(
+        "valhalla_build_tiles requires literal (pbf_path, output_dir) arguments " +
+          "— the build runs driver-side at plan time")
+    },
+    spec[Int]("travel_time_node_count", S) {
+      case (h, Seq(costing: String)) => h.requireGraph(costing).numNodes
+    },
+    spec[Option[SnappedPoint]]("travel_time_locate", D, D, S) {
+      case (h, Seq(lat: Double, lon: Double, costing: String)) =>
+        RoutingOps.locate(h.requireGraph(costing), lat, lon)
+    },
+    spec[Option[SnapResult]]("travel_time_snap", D, D, S) {
+      case (h, Seq(lat: Double, lon: Double, costing: String)) =>
+        RoutingOps.snap(h.requireGraph(costing), lat, lon)
+    },
+    // the `travel_time_route` macro surface (examples/geometry_macro.sql:30-36).
+    // Bytes, like _wkb: GEOMETRY arguments (st_point WKB — the reference
+    // macro's signature, test/sql/monaco_routing.test:150) pass through
+    // unchanged, and WKT-string endpoints arrive via Spark's implicit
+    // STRING→BINARY cast and route through routeAny's UTF-8 WKT fallback —
+    // the host's VARCHAR→BLOB coercion, so both spellings work
+    route("travel_time_route"),
+    // `travel_time_route_geom` (ITALY.md:154-166,258-272): the reference's
+    // "already GEOMETRY" variant. WKB is this engine's canonical geometry
+    // form, so the surface is identical to travel_time_route — registered
+    // under its own name so the doc statements run verbatim
+    route("travel_time_route_geom"),
+    // WKB-blob endpoints (canonical form, src/travel_time_extension.cpp:899-911)
+    route("travel_time_route_wkb"),
+    // scalar surface: explode(travel_time_matrix(...)) over column arrays
+    matrix,
+    spec[Seq[IsoNode]]("travel_time_isochrone", D, D, D, S) {
+      case (h, Seq(lat: Double, lon: Double, maxSeconds: Double, costing: String)) =>
+        RoutingOps.isochrone(h.requireGraph(costing), lat, lon, maxSeconds)
+    },
+    spec[String]("travel_time_isochrone_geojson", D, D, Ds, S) {
+      case (h, Seq(lat: Double, lon: Double, cutoffsMinutes: Seq[Double @unchecked],
+                   costing: String)) =>
+        RoutingOps.isochroneContours(h.requireGraph(costing), lat, lon, cutoffsMinutes)
+    },
+    spec[String]("travel_time_request", S, S) {
+      case (h, Seq(action: String, json: String)) => RequestApi.dispatch(h, action, json)
+    })
+
+  /** The handle a statement binds when it is analyzed. */
+  private def bound: RouterHandle = RoutingContext.handle.getOrElse(RouterHandle(Map.empty))
+
+  private def builder(s: Spec): Seq[Expression] => Expression = exprs => {
+    if (exprs.length != s.inputTypes.length) throw new IllegalArgumentException(
+      s"${s.name} expects ${s.inputTypes.length} arguments, got ${exprs.length}")
+    Call(s, bound, exprs)
+  }
+
+  /** injectFunction tuples: GraftExtensions injects them, and
+    * [[RoutingContext.install]] puts them into a session's registry.
+    */
+  val injectable: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    specs.map(s =>
+      (new FunctionIdentifier(s.name), new ExpressionInfo(classOf[Call].getName, s.name),
+        builder(s)))
+
+  /** The FROM-position `travel_time_matrix(...)` table function — the
+    * reference's form (test/sql/monaco_routing.test:108-124:
+    * `FROM travel_time_matrix([..], ..., 'auto')`) — as an
+    * injectTableFunction tuple.
+    */
+  val matrixTable: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) =
+    (new FunctionIdentifier("travel_time_matrix"),
+      new ExpressionInfo(RoutingFunctions.getClass.getName, "travel_time_matrix"),
+      exprs => matrixTableBuilder(bound, exprs))
 
   /** Optimizer rule that answers on the DRIVER at plan time what needs no
     * executor. It gives the state-changing SQL calls their reference
@@ -53,31 +203,28 @@ object RoutingFunctions {
     *    PBF→graph build (src/valhalla_build_tiles_simple.cpp:149-236) and
     *    folds to the produced config path.
     *
-    * Functions re-register against the new generation, so the reference's
-    * build-then-load-then-query script sequence works statement by
-    * statement. Non-literal arguments fall through to the registered UDFs.
+    * The next statement binds the new generation when it is analyzed, so
+    * the reference's build-then-load-then-query script sequence works
+    * statement by statement. Non-literal arguments fall through to the
+    * functions' kernels.
     *
     * Then it folds a one-row statement — `Project(list, OneRowRelation)`,
     * a SELECT without FROM — into a one-row `LocalRelation`, evaluating
     * `list` once on the driver, when every expression is deterministic and
-    * none is `Unevaluable` (which also keeps out subqueries, outer
-    * references and a non-literal [[DriverSideCall]]). This is Spark's
-    * `ConvertToLocalRelation` applied to the relation that rule never sees:
-    * `LocalTableScanExec` collects on the driver, so a point request such
-    * as `SELECT travel_time(…)` starts no job, stage, task or codegen
-    * compile. A failing function therefore throws its `FAILED_EXECUTE_UDF`
-    * during optimization, and `explain()` of such a statement runs it.
-    * Statements with a FROM keep their jobs.
+    * none is `Unevaluable` (which keeps out subqueries and outer
+    * references). This is Spark's `ConvertToLocalRelation` applied to the
+    * relation that rule never sees: `LocalTableScanExec` collects on the
+    * driver, so a point request such as `SELECT travel_time(…)` starts no
+    * job, stage, task or codegen compile. A failing kernel therefore throws
+    * its own exception during optimization, and `explain()` of such a
+    * statement runs it. Statements with a FROM keep their jobs.
     */
   final class DriverSideRule(spark: SparkSession)
-      extends org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Expression,
-      InterpretedMutableProjection, Literal, ScalaUDF, Unevaluable}
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan,
-      OneRowRelation, Project}
-    import org.apache.spark.sql.types.{BooleanType, StringType}
+      extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+    import org.apache.spark.sql.catalyst.expressions.{InterpretedMutableProjection, Literal,
+      Unevaluable}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation, Project}
+    import org.apache.spark.sql.types.BooleanType
 
     private def loadConfig(args: Seq[Expression], orig: Expression): Expression =
       args match {
@@ -101,14 +248,8 @@ object RoutingFunctions {
 
     private def substitute(plan: LogicalPlan): LogicalPlan =
       plan.transformAllExpressions {
-        case u: ScalaUDF if u.udfName.contains("travel_time_load_config") =>
-          loadConfig(u.children, u)
-        case u: ScalaUDF if u.udfName.contains("valhalla_build_tiles") =>
-          buildTiles(u.children, u)
-        case d @ DriverSideCall("travel_time_load_config", args, _) =>
-          loadConfig(args, d)
-        case d @ DriverSideCall("valhalla_build_tiles", args, _) =>
-          buildTiles(args, d)
+        case c: Call if c.spec.name == "travel_time_load_config" => loadConfig(c.children, c)
+        case c: Call if c.spec.name == "valhalla_build_tiles" => buildTiles(c.children, c)
       }
 
     private def evaluableOnDriver(e: Expression): Boolean =
@@ -124,182 +265,30 @@ object RoutingFunctions {
     override def apply(plan: LogicalPlan): LogicalPlan = foldOneRow(substitute(plan))
   }
 
-  private def injectDriverSideRule(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[DriverSideRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new DriverSideRule(spark)
-
-  /** Register every travel_time* function against the given handle. */
-  def register(spark: SparkSession, handle: RouterHandle): Unit = {
-    val h = handle // stable capture
-
-    injectDriverSideRule(spark)
-
-    spark.udf.register("travel_time",
-      (lat1: Double, lon1: Double, lat2: Double, lon2: Double, costing: String) =>
-        RoutingOps.travelTimeSeconds(h.requireGraph(costing), lat1, lon1, lat2, lon2))
-
-    spark.udf.register("travel_time_is_loaded", () => h.graphs.nonEmpty)
-
-    // Fallback surface for NON-LITERAL paths (literal calls are intercepted
-    // by [[DriverSideRule]] and actually load): reports whether the path IS
-    // the loaded generation. Evaluated per call, not captured at
-    // registration, so reloads are visible; driver-state read — on a real
-    // cluster the literal/rule path is the supported form.
-    spark.udf.register("travel_time_load_config", (path: String) => {
-      val loadedKey = RoutingContext.loadedPath.getOrElse("")
-      path != null && (path == loadedKey ||
-        path.stripSuffix("/" + graft.graph.GraphStore.ConfigName) == loadedKey)
-    })
-
-    // Literal calls run driver-side via [[DriverSideRule]] (the reference's
-    // SQL build surface, valhalla_build_tiles_simple.cpp:149-236); the UDF
-    // body exists for registry resolution and rejects the non-literal form
-    // (a build cannot launch Spark jobs from inside an executor task).
-    spark.udf.register("valhalla_build_tiles", (pbf: String, out: String) => {
-      val _ = (pbf, out)
-      throw new IllegalStateException(
-        "valhalla_build_tiles requires literal (pbf_path, output_dir) arguments " +
-          "— the build runs driver-side at plan time")
-      "": String
-    })
-
-    spark.udf.register("travel_time_node_count",
-      (costing: String) => h.requireGraph(costing).numNodes)
-
-    spark.udf.register("travel_time_locate",
-      (lat: Double, lon: Double, costing: String) =>
-        RoutingOps.locate(h.requireGraph(costing), lat, lon))
-
-    spark.udf.register("travel_time_snap",
-      (lat: Double, lon: Double, costing: String) =>
-        RoutingOps.snap(h.requireGraph(costing), lat, lon))
-
-    // the `travel_time_route` macro surface (examples/geometry_macro.sql:30-36).
-    // Bytes, like _wkb: GEOMETRY arguments (st_point WKB — the reference
-    // macro's signature, test/sql/monaco_routing.test:150) pass through
-    // unchanged, and WKT-string endpoints arrive via Spark's implicit
-    // STRING→BINARY cast and route through routeAny's UTF-8 WKT fallback —
-    // the host's VARCHAR→BLOB coercion, so both spellings work
-    spark.udf.register("travel_time_route",
-      (from: Array[Byte], to: Array[Byte], costing: String) =>
-        RoutingOps.routeAny(h.requireGraph(costing), from, to))
-
-    // `travel_time_route_geom` (ITALY.md:154-166,258-272): the reference's
-    // "already GEOMETRY" variant. WKB is this engine's canonical geometry
-    // form, so the surface is identical to travel_time_route — registered
-    // under its own name so the doc statements run verbatim
-    spark.udf.register("travel_time_route_geom",
-      (from: Array[Byte], to: Array[Byte], costing: String) =>
-        RoutingOps.routeAny(h.requireGraph(costing), from, to))
-
-    // WKB-blob endpoints (canonical form, src/travel_time_extension.cpp:899-911)
-    spark.udf.register("travel_time_route_wkb",
-      (from: Array[Byte], to: Array[Byte], costing: String) =>
-        RoutingOps.routeAny(h.requireGraph(costing), from, to))
-
-    // scalar surface: explode(travel_time_matrix(...)) over column arrays
-    spark.udf.register("travel_time_matrix",
-      (srcLats: Seq[Double], srcLons: Seq[Double],
-       dstLats: Seq[Double], dstLons: Seq[Double], costing: String) =>
-        RoutingOps.matrixEntries(h.requireGraph(costing), srcLats, srcLons, dstLats, dstLons))
-
-    // table-function surface — the reference's FROM-position form
-    // (test/sql/monaco_routing.test:108-124: `FROM travel_time_matrix([..],
-    // ..., 'auto')`). Literal arrays evaluate at plan time; the bounded
-    // matrix (the host caps pairs at 2500) materializes as a LocalRelation.
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "travel_time_matrix", matrixTableBuilder(h), "scala_udf")
-
-    spark.udf.register("travel_time_isochrone",
-      (lat: Double, lon: Double, maxSeconds: Double, costing: String) =>
-        RoutingOps.isochrone(h.requireGraph(costing), lat, lon, maxSeconds))
-
-    spark.udf.register("travel_time_isochrone_geojson",
-      (lat: Double, lon: Double, cutoffsMinutes: Seq[Double], costing: String) =>
-        RoutingOps.isochroneContours(h.requireGraph(costing), lat, lon, cutoffsMinutes))
-
-    spark.udf.register("travel_time_request",
-      (action: String, json: String) => RequestApi.dispatch(h, action, json))
-  }
-
-  /** Unified ANY-typed route dispatch for the DataFrame API: resolves WKT vs
-    * WKB by each column's declared schema type — the Spark analogue of the
-    * reference's per-row byte sniffing (src/travel_time_extension.cpp:227-385;
-    * divergence documented in SURVEY §7 risk 2: we sniff by declared type,
-    * plus the WKB byte-sniff inside the binary branch).
-    */
-  def routeUnified(df: DataFrame, fromCol: String, toCol: String,
-                   costing: String, handle: RouterHandle): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types.{BinaryType, StringType}
-    val h = handle
-    def asAnchor(name: String): org.apache.spark.sql.Column =
-      df.schema(name).dataType match {
-        case StringType =>
-          udf((s: String) => RoutingOps.anchorOf(s)).apply(col(name))
-        case BinaryType =>
-          udf((b: Array[Byte]) => RoutingOps.anchorOf(b)).apply(col(name))
-        case other =>
-          throw new IllegalArgumentException(
-            s"Column $name: expected WKT STRING or WKB BINARY, got $other")
-      }
-    val routeFromAnchors = udf((f: (Double, Double), t: (Double, Double)) =>
-      if (f == null || t == null) None
-      else RoutingOps.route(h.requireGraph(costing), f, t))
-    routeFromAnchors(asAnchor(fromCol), asAnchor(toCol))
-  }
-
   /** Builder for the FROM-position `travel_time_matrix(...)` table function:
-    * the four coordinate arrays and the costing must be literal (foldable) —
-    * a driver-side plan-time evaluation, like the host's table function
-    * binding. Output schema matches the host's (from_idx, to_idx,
-    * distance_m, duration_s).
+    * the arguments must be literal (foldable), so the scalar function is
+    * evaluated once on the driver at plan time, like the host's table
+    * function binding; the bounded matrix (the host caps pairs at 2500)
+    * materializes as a LocalRelation of its (from_idx, to_idx, distance_m,
+    * duration_s) entries. A NULL argument gives no rows.
     */
-  private def matrixTableBuilder(h: RouterHandle)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = { exprs =>
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+  private def matrixTableBuilder(h: RouterHandle, exprs: Seq[Expression]): LogicalPlan = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.util.ArrayData
     if (exprs.length != 5) throw new IllegalArgumentException(
       s"travel_time_matrix expects (src_lats, src_lons, dst_lats, dst_lons, costing), " +
         s"got ${exprs.length} arguments")
-    def doubles(e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[Double] = {
-      if (!e.foldable) throw new IllegalArgumentException(
-        "travel_time_matrix in FROM position expects literal coordinate arrays")
-      e.eval() match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          (0 until a.numElements()).map { i =>
-            a.get(i, e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-              .elementType) match {
-              case d: java.lang.Double => d.doubleValue()
-              case f: java.lang.Float => f.doubleValue()
-              case d: org.apache.spark.sql.types.Decimal => d.toDouble
-              case l: java.lang.Long => l.doubleValue()
-              case i2: java.lang.Integer => i2.doubleValue()
-              case other => throw new IllegalArgumentException(
-                s"travel_time_matrix: non-numeric coordinate $other")
-            }
-          }
-        case other => throw new IllegalArgumentException(
-          s"travel_time_matrix: expected an array, got $other")
-      }
+    if (!exprs.forall(_.foldable)) throw new IllegalArgumentException(
+      "travel_time_matrix in FROM position expects literal arguments")
+    val entry = matrix.dataType.asInstanceOf[ArrayType].elementType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val rows = Call(matrix, h, exprs.zip(matrix.inputTypes).map { case (e, t) => Cast(e, t) })
+      .eval() match {
+      case a: ArrayData => a.toSeq[InternalRow](entry)
+      case _ => Nil
     }
-    val costing = {
-      val e = exprs(4)
-      if (!e.foldable) throw new IllegalArgumentException(
-        "travel_time_matrix: costing must be a literal")
-      String.valueOf(e.eval())
-    }
-    val entries = RoutingOps.matrixEntries(h.requireGraph(costing),
-      doubles(exprs(0)), doubles(exprs(1)), doubles(exprs(2)), doubles(exprs(3)))
-    val output = Seq(
-      AttributeReference("from_idx", org.apache.spark.sql.types.IntegerType, nullable = false)(),
-      AttributeReference("to_idx", org.apache.spark.sql.types.IntegerType, nullable = false)(),
-      AttributeReference("distance_m", org.apache.spark.sql.types.DoubleType, nullable = false)(),
-      AttributeReference("duration_s", org.apache.spark.sql.types.DoubleType, nullable = false)())
-    LocalRelation(output, entries.map(m =>
-      InternalRow(m.from_idx, m.to_idx, m.distance_m, m.duration_s)))
+    LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(entry), rows)
   }
 }
 

@@ -28,19 +28,31 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(math.abs(c - 1.0) < 1e-12)
 
       // zero-code contract: NO install/register call — the injected
-      // placeholder function resolves the name at analysis, the injected
-      // optimizer rule performs the load at plan time
+      // functions resolve the names at analysis, the injected optimizer
+      // rule performs the load at plan time
       val dir = java.nio.file.Files.createTempDirectory("graft-ext").toString
       GraphStore.save(Map("auto" -> GridFixture.dataFrames(s2, "auto")), dir)
       RoutingContext.unload()
+      // the whole surface resolves before any load
+      assert(!s2.sql("SELECT travel_time_is_loaded() AS l").collect().head.getBoolean(0))
+      val unloaded = intercept[Exception] {
+        s2.sql("SELECT travel_time(43.7, 7.4, 43.718, 7.418, 'auto') AS t").collect()
+      }
+      def chain(t: Throwable): List[Throwable] =
+        if (t == null) Nil else t :: chain(t.getCause)
+      assert(chain(unloaded).exists(e => e.isInstanceOf[IllegalStateException] &&
+        e.getMessage.contains("Router not loaded")), unloaded)
       val ok = s2.sql(s"SELECT travel_time_load_config('$dir') AS ok")
         .collect().head.getBoolean(0)
       assert(ok && RoutingContext.isLoaded)
-      // and the load registered the full travel_time* surface as a side
-      // effect, so the next statement routes
+      // the next statement binds the loaded router at analysis and routes
       val t = s2.sql("SELECT travel_time(43.7, 7.4, 43.718, 7.418, 'auto') AS t")
         .collect().head
       assert(!t.isNullAt(0) && t.getDouble(0) > 0)
+      // the rule runs once, from the injected optimizer batch: the load
+      // added no second copy to the session's extra optimizations
+      assert(!s2.experimental.extraOptimizations
+        .exists(_.isInstanceOf[graft.routing.RoutingFunctions.DriverSideRule]))
     } finally {
       prev.foreach { p => SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p) }
       RoutingContext.unload()

@@ -36,6 +36,37 @@ class GraphStoreSpec extends AnyFunSuite {
     val t = spark.sql(
       "SELECT travel_time(43.7, 7.4, 43.718, 7.418, 'auto') AS t").collect().head
     assert(!t.isNullAt(0) && t.getDouble(0) > 0)
+
+    // a generation switch by SQL alone: a 5×5 sub-lattice of the fixture,
+    // then the full fixture again; every statement binds the graph loaded
+    // when it is analyzed
+    import org.apache.spark.sql.functions.col
+    val (nodes, edges) = GridFixture.dataFrames(spark, "auto")
+    val inSub = (c: String) => col(c) / GridFixture.K < 5 && col(c) % GridFixture.K < 5
+    val subDir = Files.createTempDirectory("graft-graph-sub").toString
+    GraphStore.save(Map("auto" ->
+      (nodes.filter(inSub("id")), edges.filter(inSub("src") && inSub("dst")))), subDir)
+    val corners = Seq(0, GridFixture.K * GridFixture.K - 1)
+      .flatMap(i => Seq(GridFixture.latOf(i), GridFixture.lonOf(i))).mkString(", ")
+    def generation(dir: String): (Int, Option[Double]) = {
+      assert(spark.sql(s"SELECT travel_time_load_config('$dir') AS ok")
+        .collect().head.getBoolean(0))
+      val n = spark.sql("SELECT travel_time_node_count('auto') AS n").collect().head.getInt(0)
+      val viaScan = spark.range(1).selectExpr(s"travel_time($corners, 'auto') AS t")
+        .collect().head
+      val kernel = graft.routing.RoutingOps.travelTimeSeconds(
+        RoutingContext.handle.get.requireGraph("auto"),
+        GridFixture.latOf(0), GridFixture.lonOf(0),
+        GridFixture.latOf(GridFixture.K * GridFixture.K - 1),
+        GridFixture.lonOf(GridFixture.K * GridFixture.K - 1))
+      assert(Option.unless(viaScan.isNullAt(0))(viaScan.getDouble(0)) == kernel, dir)
+      (n, kernel)
+    }
+    val full = generation(dir)
+    val sub = generation(subDir)
+    assert(full._1 == 100 && sub._1 == 25)
+    assert(full._2.isDefined && sub._2 != full._2)
+    assert(generation(dir) == full)
   }
 
   test("distributedCh opt-in: load builds the CH on the cluster past the gate") {

@@ -45,8 +45,7 @@ class MonacoSpec extends AnyFunSuite {
     val (nodes, edges) = RoutingCacheCodec.toDataFrames(s, g)
     RoutingContext.unload()
     try {
-      val h = RoutingContext.load(s, fixture, Map("auto" -> (nodes, edges)))
-      graft.routing.RoutingFunctions.register(s, h)
+      RoutingContext.load(s, fixture, Map("auto" -> (nodes, edges)))
       val r = s.sql(
         """SELECT travel_time_node_count('auto'),
           |  travel_time(43.7397, 7.4282, 43.7347, 7.4207, 'auto'),

@@ -107,6 +107,7 @@ class SparkRoutingSpec extends AnyFunSuite {
     Seq(
       "travel_time(43.7, 7.4, 43.745, 7.445, 'auto')",
       "travel_time_route_wkb(st_point(7.4, 43.7), st_point(7.44, 43.74), 'auto')",
+      s"travel_time_route_wkb(X'${wkbHex(7.4, 43.7)}', X'${wkbHex(7.44, 43.74)}', 'auto')",
       "travel_time_snap(43.7, 7.4, 'auto')",
       "travel_time_isochrone(43.7, 7.4, 120.0, 'auto')",
       """travel_time_request('route', '{"locations": [{"lat": 43.7, "lon": 7.4},
@@ -119,8 +120,19 @@ class SparkRoutingSpec extends AnyFunSuite {
       assert(scannedJobs > 0, call)
       assert(!folded.isNullAt(0), call)
       assert(folded == scanned, call)
+      // no typed encoder is resolved for a statement of routing functions
+      // alone (st_point stays a typed UDF)
+      if (!call.contains("st_point")) {
+        val encoderRuns = spark.sql(s"SELECT $call AS v").queryExecution.tracker.rules
+          .collect { case (rule, s) if rule.endsWith("ResolveEncodersInUDF") =>
+            s.numEffectiveInvocations }
+        assert(encoderRuns.sum == 0, call)
+      }
     }
   }
+
+  private def wkbHex(lon: Double, lat: Double): String =
+    Wkb.writePoint(lon, lat).map("%02X".format(_)).mkString
 
   test("a nondeterministic one-row statement still runs as a job") {
     assert(withJobs(spark.sql("SELECT rand() AS r").collect())._2 > 0)
